@@ -39,6 +39,7 @@ from kenshin_backup_spark.operators.ladder import (
     compact_level,
     expire_retention,
     fetch_from_ladder,
+    open_level,
 )
 from kenshin_backup_spark.operators.policies import (
     DEFAULT_POLICY,
@@ -323,11 +324,12 @@ class Engine:
         # itself duplicate the leaf SUBTREE in the final plan — a deep
         # target re-ran the archive scan+grid >100× per action; the persist
         # point makes Spark's cache manager substitute one InMemoryRelation
-        # for every duplicate at execution. (b) each fetch_from_ladder plan
-        # build costs driver-side file listing + py4j round-trips; the memo
-        # pays it once per distinct glob instead of once per leaf
-        # reference. Scope is ONE render request (series-count × window
-        # buckets rows — dashboard-bounded); the registry wrapper clears
+        # for every duplicate at execution. (b) the persist materializes
+        # once per distinct glob, so the leaf's scan + gap-fill grid runs
+        # once per request instead of once per leaf reference (building
+        # the fetch plan itself runs no Spark job — see
+        # fetch_from_ladder). Scope is ONE render request (series-count ×
+        # window buckets rows — dashboard-bounded); the registry wrapper clears
         # tracked persists between queries, so a long session never
         # accumulates render caches. A multi-target request (render_many,
         # or a caller unioning several renders of one dashboard panel)
@@ -594,6 +596,20 @@ class Engine:
             ],
         }
 
+    def _catalog(self) -> DataFrame | None:
+        """The ``metric`` column of every written policy's finest level,
+        unioned into one scan (None before any write). Every series lands
+        in its policy's finest level, so this is the whole catalog."""
+        cat: DataFrame | None = None
+        for p in self.policies:
+            if p.name not in self._written:
+                continue
+            lad = self._ladder(p)
+            finest = min(a.step_seconds for a in lad.archives)
+            scan = open_level(self.spark, lad, finest).select("metric")
+            cat = scan if cat is None else cat.unionByName(scan)
+        return cat
+
     def metrics(self, glob: str = "*", *, limit: int = 100_000) -> list[str]:
         """Metric browse over everything written, filtered by glob.
 
@@ -604,20 +620,9 @@ class Engine:
         list, so a driver-side list is inherent — the cap bounds it; raise
         ``limit`` or narrow the glob for bigger catalogs). Exact globs
         short-circuit to an equality predicate."""
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select("metric")
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return []
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         cat = metric_filter(cat, "metric", glob)
         rows = cat.distinct().limit(limit).collect()
         return sorted(r.metric for r in rows)
@@ -629,22 +634,9 @@ class Engine:
         name set — never from the point data."""
         from pyspark.sql import functions as F
 
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select(
-                    "metric"
-                )
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return None
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         names = cat.distinct()
         pair = F.split(F.col("__kv"), "=", 2)
         return (
@@ -718,20 +710,9 @@ class Engine:
         # tail anchored to "end of name OR a deeper component"
         body = glob_to_regex(query)[1:-1]
         prefix_rx = f"^(?:{body})(?:$|\\.)"
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select("metric")
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return []
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         parts = F.split(F.col("metric"), r"\.")
         nodes = (
             cat.where(F.col("metric").rlike(prefix_rx))

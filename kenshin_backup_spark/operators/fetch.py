@@ -130,6 +130,17 @@ def clamp_range(
     return lo, hi
 
 
+def route(
+    archives: list[Archive], from_ts: int, until_ts: int, now_ts: int
+) -> tuple[Archive, int, int]:
+    """Clamp the request range and pick the archive that serves it:
+    ``(archive, lo, hi)`` with the clamped bounds (reference
+    Storage.fetch, SURVEY §2.2 P3 + §4.1 O5)."""
+    max_ret = max(a.retention_seconds for a in archives)
+    lo, hi = clamp_range(from_ts, until_ts, now_ts, max_ret)
+    return select_archive(archives, lo, now_ts), lo, hi
+
+
 def fetch(
     spark: SparkSession,
     levels: dict[int, DataFrame],
@@ -149,9 +160,7 @@ def fetch(
     with partial columns (NULL on gaps) — callers apply
     :func:`kenshin_backup_spark.operators.rollup.finalize` to pick a kernel.
     """
-    max_ret = max(a.retention_seconds for a in archives)
-    lo, hi = clamp_range(from_ts, until_ts, now_ts, max_ret)
-    archive = select_archive(archives, lo, now_ts)
+    archive, lo, hi = route(archives, from_ts, until_ts, now_ts)
     if archive.step_seconds not in levels:
         raise KeyError(f"no materialized level for step={archive.step_seconds}s")
     table = levels[archive.step_seconds]

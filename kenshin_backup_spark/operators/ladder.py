@@ -23,8 +23,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from kenshin_backup_spark.operators.fetch import Archive, fetch
+from kenshin_backup_spark.operators.fetch import Archive, fetch, route
 from kenshin_backup_spark.operators.rollup import cascade, rollup_partials
 
 
@@ -105,25 +106,30 @@ class Ladder:
     def level_path(self, step_seconds: int) -> str:
         return f"{self.root}/step={step_seconds}"
 
-    def bucket_expr(self, col: str | None = None) -> Column:
-        """The bucket id of a series key — MUST match on write and read."""
+    def bucket_expr(self, key: Column | None = None) -> Column:
+        """The bucket id of a series key — MUST match on write and read.
+
+        ``key`` defaults to the ladder's series-key column (the write
+        side); the fetch side passes ``F.lit(name)``, which Catalyst folds
+        to a literal bucket id, so the prune is a partition filter that
+        runs no job."""
         if self.metric_buckets <= 0:
             raise ValueError("ladder is not bucketed")
         return F.pmod(
-            F.xxhash64(F.col(col or self.key_cols[0])),
+            F.xxhash64(F.col(self.key_cols[0]) if key is None else key),
             F.lit(int(self.metric_buckets)),
         ).cast("int")
 
     def buckets_for(self, spark: SparkSession, names: list[str]) -> list[int]:
-        """Bucket ids for exact series names (computed through the same
-        Spark expression as the write side, so they can never drift)."""
+        """Distinct bucket ids of several exact series names, collected
+        into a Python list (the delete path walks one ``mbucket=``
+        directory per id). Runs Spark jobs — a single-name fetch prunes with
+        ``bucket_expr(F.lit(name))`` instead, which runs none."""
         if not names:
             return []
         df = spark.createDataFrame([(n,) for n in names], "k string")
         rows = df.select(
-            F.pmod(F.xxhash64("k"), F.lit(int(self.metric_buckets)))
-            .cast("int")
-            .alias("b")
+            self.bucket_expr(F.col("k")).alias("b")
         ).distinct().collect()
         return sorted(r["b"] for r in rows)
 
@@ -144,6 +150,7 @@ def build_ladder(
     steps = sorted(a.step_seconds for a in ladder.archives)
     prev: DataFrame | None = None
     prev_step: int | None = None
+    schemas: dict[int, str] = {}
     for step in steps:
         if prev is None:
             level = rollup_partials(
@@ -188,19 +195,22 @@ def build_ladder(
         # forbids). Reading the written parquet back scans the 10-600×
         # smaller partials instead; values round-trip exactly (long/double
         # columns, no rewriting), so the cascade output is unchanged.
-        prev = (
-            points.sparkSession.read.parquet(ladder.level_path(step))
-            .drop("date", "mbucket")
-        )
+        # That read-back already inferred the level's schema (partition
+        # columns included), so recording it for open_level is free.
+        written = points.sparkSession.read.parquet(ladder.level_path(step))
+        schemas[step] = written.schema.json()
+        prev = written.drop("date", "mbucket")
         prev_step = step
-    _write_layout_manifest(ladder)
+    _write_layout_manifest(ladder, schemas)
 
 
-def _write_layout_manifest(ladder: Ladder) -> None:
+def _write_layout_manifest(ladder: Ladder, schemas: dict[int, str]) -> None:
     """Record the layout the data was written with (ADVICE r7: the
     bucket-pruned delete/fetch paths must never trust the CONFIGURED
-    ``metric_buckets`` over the on-disk truth). Lives at the ladder
-    root — level swaps never touch it."""
+    ``metric_buckets`` over the on-disk truth) and each level's schema
+    (so :func:`open_level` skips the footer-reading inference job).
+    Lives at the ladder root — level swaps never touch it, and no
+    rewrite (compaction, delete, expiry) changes a level's schema."""
     import json
     import os
 
@@ -211,10 +221,41 @@ def _write_layout_manifest(ladder: Ladder) -> None:
             {
                 "metric_buckets": int(ladder.metric_buckets),
                 "key_cols": list(ladder.key_cols),
+                "schemas": {str(step): js for step, js in schemas.items()},
             },
             fh,
         )
     os.replace(tmp, ladder.manifest_path())
+
+
+def _recorded_schema(ladder: Ladder, step_seconds: int) -> StructType | None:
+    """The schema :func:`build_ladder` recorded for one level, or None
+    when the manifest is missing, predates recorded schemas, or is
+    corrupt in any way (callers then infer, as for any parquet dir)."""
+    import json
+
+    try:
+        with open(ladder.manifest_path()) as fh:
+            recorded = json.load(fh)["schemas"][str(step_seconds)]
+        schema = StructType.fromJson(json.loads(recorded))
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return None
+    return schema if schema.fields else None
+
+
+def open_level(spark: SparkSession, ladder: Ladder, step_seconds: int) -> DataFrame:
+    """Open one materialized level for reading.
+
+    With a recorded schema the open runs no Spark job (a bare
+    ``spark.read.parquet`` runs one to infer the schema from a footer).
+    Only the schema is reused: the file listing is taken fresh on every
+    open, because compaction, delete and expiry swap level directories.
+    Ladders without a usable recorded schema fall back to inference."""
+    path = ladder.level_path(step_seconds)
+    schema = _recorded_schema(ladder, step_seconds)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def expire_retention(ladder: Ladder, *, now_ts: int) -> dict[int, list[str]]:
@@ -544,9 +585,9 @@ def ladder_info(spark: SparkSession, ladder: Ladder) -> DataFrame:
 
 
 def load_levels(spark: SparkSession, ladder: Ladder) -> dict[int, DataFrame]:
-    """Open every materialized level for the fetch API."""
+    """Open every materialized level (see :func:`open_level`)."""
     return {
-        a.step_seconds: spark.read.parquet(ladder.level_path(a.step_seconds))
+        a.step_seconds: open_level(spark, ladder, a.step_seconds)
         for a in ladder.archives
     }
 
@@ -563,11 +604,15 @@ def fetch_from_ladder(
     """End-to-end reference read path over the materialized ladder:
     archive selection → partition-pruned scan → grid gap-fill.
 
-    On a bucketed ladder, an EXACT metric name additionally prunes to
-    its single ``mbucket=`` partition (hash-bucket pruning — the same
-    predicate the write side used), stacking with the date pruning the
-    fetch path already does."""
-    levels = load_levels(spark, ladder)
+    Only the level the request routes to is opened, through
+    :func:`open_level`. On a bucketed ladder, an EXACT metric name
+    additionally prunes to its single ``mbucket=`` partition: the
+    write side's bucket expression applied to the literal name folds to
+    a partition filter that stacks with the date pruning. With a
+    recorded level schema, building this plan runs no Spark job."""
+    archives = list(ladder.archives)
+    step = route(archives, from_ts, until_ts, now_ts)[0].step_seconds
+    level = open_level(spark, ladder, step)
     if (
         ladder.metric_buckets > 0
         and metric_glob is not None
@@ -577,15 +622,13 @@ def fetch_from_ladder(
         # would silently fetch an empty series
         and ladder.verified_bucketed()
     ):
-        bs = ladder.buckets_for(spark, [metric_glob])
-        levels = {
-            step: df.where(F.col("mbucket").isin(bs))
-            for step, df in levels.items()
-        }
+        level = level.where(
+            F.col("mbucket") == ladder.bucket_expr(F.lit(metric_glob))
+        )
     return fetch(
         spark,
-        levels,
-        list(ladder.archives),
+        {step: level},
+        archives,
         metric_glob=metric_glob,
         from_ts=from_ts,
         until_ts=until_ts,

@@ -9,6 +9,7 @@ from kenshin_backup_spark.plans.inspect import (
     has_broadcast_join,
     pushed_filters,
     scan_read_schema,
+    spark_jobs,
     unpartitioned_windows,
     wholestage_codegen_spans,
     without_aqe,
@@ -19,6 +20,7 @@ __all__ = [
     "has_broadcast_join",
     "pushed_filters",
     "scan_read_schema",
+    "spark_jobs",
     "unpartitioned_windows",
     "wholestage_codegen_spans",
     "without_aqe",

@@ -12,11 +12,15 @@ same text ``df.explain("formatted")`` prints — into checkable facts:
   (dims must never sort-merge).
 - :func:`wholestage_codegen_spans` — count of WholeStageCodegen subtrees;
   expressions falling out of codegen (UDFs in the hot path) show up here.
+- :func:`spark_jobs` — Spark jobs a block of Python code launched (plan
+  building that runs jobs pays them on every request).
 """
 
 from __future__ import annotations
 
 import re
+import time
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +37,33 @@ def without_aqe(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession):
+    """Count the Spark jobs the block runs; the yielded dict holds
+    ``jobs`` once the block has finished. Jobs are tagged with a fresh job
+    group and read back from the status tracker. A sentinel job in a
+    second group closes the count: the listener bus delivers job events
+    in order, so once the tracker has seen the sentinel it has seen every
+    job of the block."""
+    sc = spark.sparkContext
+    gid = f"counted-{uuid.uuid4().hex}"
+    out = {"jobs": 0}
+    try:
+        sc.setJobGroup(gid, gid)
+        yield out
+        sc.setJobGroup(gid + "-end", gid)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(gid + "-end"):
+        if time.monotonic() > deadline:
+            raise RuntimeError("status tracker never reported the sentinel job")
+        time.sleep(0.01)
+    out["jobs"] = len(tracker.getJobIdsForGroup(gid))
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -17,6 +17,7 @@ from kenshin_backup_spark.operators.ladder import (
     load_levels,
 )
 from kenshin_backup_spark.operators.rollup import finalize, rollup_partials
+from kenshin_backup_spark.plans import spark_jobs
 
 UTC = dt.timezone.utc
 NOW = 100_000
@@ -182,6 +183,44 @@ def test_fetch_prunes_date_partitions(spark, tmp_path):
     import re
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", text)
     assert pf and "date" in pf.group(1), f"no date partition filter in scan: {pf}"
+
+    # bucketed layout: an exact name also prunes its hash bucket, and the
+    # bucket predicate is a partition filter next to the date range
+    bkt = Ladder(
+        root=str(tmp_path / "ladder3b"),
+        archives=(Archive(60, 5000),),
+        metric_buckets=4,
+    )
+    build_ladder(_points(spark), bkt)
+    out = fetch_from_ladder(
+        spark, bkt, metric_glob="srv.web.cpu",
+        from_ts=NOW - 3000, until_ts=NOW, now_ts=NOW,
+    )
+    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", explain_str(out))
+    assert any("date" in f and "mbucket" in f for f in pfs), pfs
+
+
+def test_fetch_plan_runs_no_spark_job(spark, tmp_path):
+    """Planning a fetch on a bucketed ladder — exact name (bucket-pruned)
+    and glob — opens the routed level with its recorded schema and folds
+    the bucket id to a literal, so it launches no Spark job; the last
+    check proves the counter does see jobs."""
+    ladder = Ladder(
+        root=str(tmp_path / "ladder_plan"),
+        archives=(Archive(60, 200), Archive(600, 200), Archive(3600, 48)),
+        metric_buckets=4,
+    )
+    build_ladder(_points(spark), ladder)
+    for glob in ("srv.web.cpu", "srv.*.cpu"):
+        with spark_jobs(spark) as plan:
+            fetch_from_ladder(
+                spark, ladder, metric_glob=glob,
+                from_ts=NOW - 3000, until_ts=NOW, now_ts=NOW,
+            )
+        assert plan["jobs"] == 0, glob
+    with spark_jobs(spark) as probe:
+        spark.range(3).collect()
+    assert probe["jobs"] == 1
 
 
 def test_materialized_cascade_equals_direct(spark, tmp_path):
@@ -392,3 +431,70 @@ def test_layout_manifest_guards_bucket_pruning(spark, tmp_path):
             fh.write(corrupt)
         assert bkt.on_disk_metric_buckets() == -1  # inferred from mbucket=
         assert bkt.verified_bucketed() is False
+
+    # 6) recorded level schemas: whatever state the manifest is in, and
+    #    after every level rewrite, opened levels and fetches return the
+    #    same rows as plain schema inference
+    from kenshin_backup_spark.operators.fetch import fetch
+    from kenshin_backup_spark.operators.ladder import compact_level
+
+    def rows(df):
+        return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
+
+    def assert_reads_as_inferred(lad):
+        inferred = {
+            a.step_seconds: spark.read.parquet(lad.level_path(a.step_seconds))
+            for a in lad.archives
+        }
+        for step, df in load_levels(spark, lad).items():
+            assert rows(df) == rows(inferred[step]), step
+        for glob in ("srv.web.cpu", "srv.*.cpu"):
+            kw = dict(
+                metric_glob=glob, from_ts=NOW - 3000, until_ts=NOW, now_ts=NOW
+            )
+            want = fetch(
+                spark, inferred, list(lad.archives), key_cols=["metric"], **kw
+            )
+            assert rows(fetch_from_ladder(spark, lad, **kw)) == rows(want), glob
+
+    build_ladder(pts, bkt)
+    with open(bkt.manifest_path()) as fh:
+        manifest = json.load(fh)
+    assert set(manifest["schemas"]) == {"60"}
+    assert_reads_as_inferred(bkt)
+    for schemas in (
+        None,  # a manifest written before level schemas were recorded
+        {"60": "not json"},
+        {"60": 5},
+        "wrong type",
+        {"600": manifest["schemas"]["60"]},  # no entry for this step
+    ):
+        stale = {k: v for k, v in manifest.items() if k != "schemas"}
+        if schemas is not None:
+            stale["schemas"] = schemas
+        with open(bkt.manifest_path(), "w") as fh:
+            json.dump(stale, fh)
+        assert bkt.verified_bucketed() is True
+        assert_reads_as_inferred(bkt)
+    os.remove(bkt.manifest_path())
+    assert_reads_as_inferred(bkt)
+
+    # compaction swaps the level directory under an unchanged schema
+    build_ladder(pts, bkt)
+    lvl = bkt.level_path(60)
+    debris = spark.read.parquet(lvl).localCheckpoint(eager=True)
+    debris.repartition(4).write.mode("append").partitionBy(
+        "mbucket", "date"
+    ).parquet(lvl)
+    before, after = compact_level(spark, bkt, 60)
+    assert after < before
+    assert_reads_as_inferred(bkt)
+
+    # deleting every series leaves one unpartitioned empty footer, flat
+    # (the `flat` ladder still holds srv.db.cpu) and bucketed
+    delete_metrics(spark, flat, metrics=["srv.db.cpu"])
+    assert load_levels(spark, flat)[60].count() == 0
+    assert_reads_as_inferred(flat)
+    delete_metrics(spark, bkt, metrics=["srv.web.cpu", "srv.db.cpu"])
+    assert not any(e.startswith("mbucket=") for e in os.listdir(lvl))
+    assert_reads_as_inferred(bkt)

@@ -1,10 +1,14 @@
 #!/usr/bin/env python3
 """Phase decomposition for one store-backed render query: times the
-store build (Engine.write), the bounds acquisition, and the render
-evaluation separately, so write-cost claims are measurable per phase.
+store build (Engine.write), the bounds acquisition, the render PLAN
+(building the DataFrame: fetch plans, render compile) and the render
+EXECUTION separately, so write- and plan-cost claims are measurable per
+phase. Each render phase also reports how many Spark jobs it ran — a
+plan-time job is setup work the request pays before it executes.
 
 Usage: python tools/store_decompose.py [--sf DIR] [--reps N]
-Prints one JSON line per rep: {"write": s, "bounds": s, "render": s}.
+Prints one JSON line per rep: {"write": s, "bounds": s, "render_plan": s,
+"render_plan_jobs": n, "render_exec": s, "render_exec_jobs": n, "total": s}.
 Uses graphite_render_group_order's store (the heaviest store-family
 query) rebuilt the same way the query builds it.
 """
@@ -38,6 +42,7 @@ def main() -> None:
     from kenshin_backup_spark.api import Engine
     from kenshin_backup_spark.cache import clear_tracked
     from kenshin_backup_spark.operators.policies import Policy
+    from kenshin_backup_spark.plans import spark_jobs
     from kenshin_backup_spark.queries.batch80 import _store_points
     from kenshin_backup_spark.queries.batch83 import _T_BRANCH, _T_SORTED
     from kenshin_backup_spark.session import get_spark
@@ -67,14 +72,23 @@ def main() -> None:
             bounds = (bd.lo, bd.hi)
         t2 = time.perf_counter()
         lo = bounds[0] - bounds[0] % 86400
-        out = eng.render_many([_T_SORTED, _T_BRANCH], lo, bounds[1] + 1)
-        out.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
+        # the clocks stop inside each block: the job counter's closing
+        # sentinel job is not part of either phase
+        with spark_jobs(spark) as plan:
+            out = eng.render_many([_T_SORTED, _T_BRANCH], lo, bounds[1] + 1)
+            t3 = time.perf_counter()
+        with spark_jobs(spark) as run:
+            t4 = time.perf_counter()
+            out.write.format("noop").mode("overwrite").save()
+            t5 = time.perf_counter()
         print(json.dumps({
             "write": round(t1 - t0, 3),
             "bounds": round(t2 - t1, 3),
-            "render": round(t3 - t2, 3),
-            "total": round(t3 - t0, 3),
+            "render_plan": round(t3 - t2, 3),
+            "render_plan_jobs": plan["jobs"],
+            "render_exec": round(t5 - t4, 3),
+            "render_exec_jobs": run["jobs"],
+            "total": round(t3 - t0 + t5 - t4, 3),
         }))
     spark.stop()
 
